@@ -563,7 +563,9 @@ object Graphs {
     * [[Analytics.MaxBasketWidth]], pair-grain count); then k
     * synchronous rounds of (labels ⋈ edges → count → top-1 per node)
     * — frontier-free Pregel, two label-message-grain shuffles per
-    * round, labels checkpointed so no round replays the chain. Same
+    * round, all k fixed rounds planned lazily into ONE DAG that a
+    * single action executes (each round's labels have exactly one
+    * consumer, so no round replays another). Same
     * regime as q111/q121 (per-round floor at tiny SF, amortizes with
     * data — round-21's measured 1.75×@10×). */
   def labelPropagation(spark: SparkSession, dir: String,

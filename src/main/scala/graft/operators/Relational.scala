@@ -355,52 +355,6 @@ object Relational {
       valueCols.flatMap { case (v, _) => Seq(s"_ls_$v", s"_off_$v") }: _*)
   }
 
-  /** [[denseGlobalRank]] for inputs whose lineage is CHEAP TO RE-EXECUTE
-    * (a plain scan/filter, not a join): equi-depth boundaries from one
-    * narrow quantile pass over the key column, scan-local bucket ids,
-    * exact per-bucket counts as broadcast offsets — no checkpoint, no
-    * full-row materialization. The input plan executes three times
-    * (boundaries, counts, rank), which only wins when that plan is a
-    * scan; for join-heavy inputs the checkpointing [[denseGlobalRank]]
-    * is strictly better (measured: the quantile path on the SCD2 merge
-    * inserts regressed 2.1s→2.6s, on the initial-load scan it wins).
-    * Correctness does not depend on boundary quality — any bucketing
-    * yields the same global rank for unique keys (ties can't split:
-    * equal keys always bucket together) — so the sketch quantiles are
-    * safe. Non-numeric keys fall back to the generic path. */
-  def denseGlobalRankRescan(df: DataFrame, orderCol: String, skName: String,
-      base: Long): DataFrame = {
-    val spark = df.sparkSession
-    val isNumeric = df.schema(orderCol).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    if (!isNumeric) return denseGlobalRank(df, orderCol, skName, base)
-    val nb = math.max(2, spark.sessionState.conf.numShufflePartitions)
-    val probs = (1 until nb).map(_.toDouble / nb)
-    val bRow = df.select(percentile_approx(col(orderCol).cast("double"),
-      typedLit(probs), lit(10000)).as("bs")).first()
-    val bounds = if (bRow.isNullAt(0)) Seq.empty[Double]
-      else bRow.getSeq[Double](0).distinct.sorted
-    // scan-local bucket id: #boundaries strictly below the key
-    // (null keys coalesce to bucket 0, matching NULLS FIRST ordering)
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + coalesce((col(orderCol).cast("double") > lit(b)).cast("int"),
-        lit(0))
-    }
-    val withB = df.withColumn("_bkt", bucket)
-    val counts = withB.groupBy("_bkt").agg(count(lit(1)).as("_cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = counts.scanLeft(0 -> 0L) {
-      case ((_, acc), (b, cnt)) => b -> (acc + cnt)
-    }.tail.zip(counts).map { case ((b, end), (_, cnt)) => (b, end - cnt) }
-    val offsetDf = spark.createDataFrame(offsets.toSeq).toDF("_bkt", "_off")
-    withB
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy("_bkt").orderBy(orderCol)))
-      .join(broadcast(offsetDf), "_bkt")
-      .withColumn(skName, col("_lrn") + col("_off") + lit(base))
-      .drop("_bkt", "_lrn", "_off")
-  }
-
   /** Two-phase global ROW_NUMBER over an arbitrary total-order key
     * expression (possibly composite, possibly descending — callers
     * negate numeric components for DESC): materialize the key as a

@@ -329,8 +329,8 @@ object Retrieval {
       fb: Int = 3, m: Int = 3): DataFrame = {
     import spark.implicits._
     val s = bm25Stats(spark, dir)
-    val small = s.nq.toDouble * s.avgdl <= 4e6
     val ctx = queryCtx(spark, dir, s)
+    val small = ctx.bcast
     val (q, posts1) = (ctx.q, ctx.posts)
     val rankW = Window.partitionBy("query_id")
       .orderBy(desc("s9"), asc("doc_id"))

@@ -44,8 +44,7 @@ object Scd2 {
   case class Config(
       keyCol: String,
       trackedCols: Seq[String],
-      skCol: String = "sk",
-      denseSk: Boolean = true)
+      skCol: String = "sk")
 
   /** Row hash over tracked attributes (reference Scd_Type2.sql:25–32
     * MD5(CONCAT(COALESCE(...)))) — we insert a  separator because
@@ -59,28 +58,25 @@ object Scd2 {
     * version. Dense SKs via [[Relational.denseGlobalRank]] — a two-phase
     * range-partition + broadcast-offset rank that is bit-identical to the
     * single-partition `ROW_NUMBER() OVER (ORDER BY key)` (proven in
-    * Round7Spec) but never serializes the dimension through one task;
-    * `denseSk = false` switches to monotonically_increasing_id for
-    * fact-scale tables — SURVEY §4 divergence note. */
-  def initialLoad(staging: DataFrame, cfg: Config, loadTs: Column): DataFrame = {
-    val withSk =
-      if (cfg.denseSk)
-        // initial-load staging is scan-shaped (no join upstream), so the
-        // rescan variant wins: no checkpoint, only the key column pays
-        Relational.denseGlobalRankRescan(staging, cfg.keyCol, cfg.skCol, 0L)
-          .withColumn(cfg.skCol, col(cfg.skCol).cast("long"))
-      else staging.withColumn(cfg.skCol, monotonically_increasing_id() + 1)
+    * Round7Spec) but never serializes the dimension through one task.
+    * The same rank continues the keys in [[merge]], so every SCD2 SK
+    * comes from one code path. */
+  def initialLoad(staging: DataFrame, cfg: Config, loadTs: Column): DataFrame =
+    opened(Relational.denseGlobalRank(staging, cfg.keyCol, cfg.skCol, 0L),
+      loadTs)
+
+  /** Stamp freshly-keyed rows as open versions starting at `loadTs`. */
+  private def opened(withSk: DataFrame, loadTs: Column): DataFrame =
     withSk
       .withColumn("valid_from", loadTs)
       .withColumn("valid_to", to_timestamp(lit(FarFuture)))
       .withColumn("is_current", lit(true))
-  }
 
   /** One merge pass: `dim` is the full history table (current + closed
     * rows), `staging` carries the key + tracked columns. Returns the new
     * full history. */
   def merge(dim: DataFrame, staging: DataFrame, cfg: Config,
-      loadTs: Column, knownMaxSk: Option[Long] = None): DataFrame = {
+      loadTs: Column): DataFrame = {
     val k = cfg.keyCol
     val attrs = cfg.trackedCols
     val dimCols = (Seq(k) ++ attrs ++ Seq(cfg.skCol, "valid_from",
@@ -110,29 +106,19 @@ object Scd2 {
 
     // inserts = changed ∪ fresh, SKs continuing from MAX(existing)
     // (Scd_Type2.sql:34's scalar subquery → one driver scalar; at scale
-    // this is a metadata-sized agg, not a data motion). Callers that
-    // know the max structurally (e.g. right after a dense initial load,
-    // where it equals the row count) pass it in and skip the extra
-    // action — which otherwise re-evaluates the dimension lineage,
-    // including the SK-assignment sort, once per merge.
-    val maxSk = knownMaxSk.getOrElse(
-      dim.agg(coalesce(max(col(cfg.skCol)), lit(0L))).first().getLong(0))
+    // this is a metadata-sized agg, not a data motion — a dimension
+    // fresh from initialLoad answers it from the rank's checkpoint plus
+    // one per-partition window, never re-running the staging lineage).
+    val maxSk =
+      dim.agg(coalesce(max(col(cfg.skCol)), lit(0L))).first().getLong(0)
     val insertRows = changed.unionByName(fresh)
       .select(col(k) +: attrs.map(col): _*)
     // SK continuation via the same two-phase global rank as initialLoad
     // (base = MAX(existing)): no single-partition WindowExec anywhere in
     // the merge, so a wide dimension merge parallelizes across the range
     // partitions instead of serializing through one task.
-    val withSk =
-      if (cfg.denseSk)
-        Relational.denseGlobalRank(insertRows, k, cfg.skCol, maxSk)
-          .withColumn(cfg.skCol, col(cfg.skCol).cast("long"))
-      else insertRows.withColumn(cfg.skCol,
-        monotonically_increasing_id() + maxSk + 1)
-    val inserts = withSk
-      .withColumn("valid_from", loadTs)
-      .withColumn("valid_to", to_timestamp(lit(FarFuture)))
-      .withColumn("is_current", lit(true))
+    val inserts = opened(
+      Relational.denseGlobalRank(insertRows, k, cfg.skCol, maxSk), loadTs)
 
     // close changed current rows; keep unchanged current rows
     val changedKeys = changed.select(col(k).as("__k")).distinct()
@@ -172,15 +158,10 @@ object Scd2 {
     val initial = o.filter(col("order_id") % 10 < 8)
     val staging = o.withColumn("order_status",
       when(col("order_id") % 5 === 0, lit("D")).otherwise(col("order_status")))
-    // merge() references dim0 from four branches (current, history,
-    // closed, unchanged); measured head-to-head, an eager
-    // localCheckpoint cut does NOT beat recomputation here — AQE's
-    // ReusedExchange already dedups the window-sort exchange across the
-    // branches, so the extra materialization only adds serialization.
-    val dim0 = initialLoad(initial, cfg, t1)
-    // dense initial load → max SK == row count; a column-pruned count on
-    // the filtered scan is far cheaper than evaluating dim0's window
-    merge(dim0, staging, cfg, t2, knownMaxSk = Some(initial.count()))
+    // dim0's rank already sits on a localCheckpoint, so merge()'s four
+    // dim0 branches (current, history, closed, unchanged) and its MAX(sk)
+    // probe read the checkpoint, not the orders scan
+    merge(initialLoad(initial, cfg, t1), staging, cfg, t2)
   }
 
   /** Written-history cache: one parquet materialization per source dir

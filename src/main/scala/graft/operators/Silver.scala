@@ -24,12 +24,6 @@ import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
   */
 object Silver {
 
-  /** Data-quality counters emitted alongside the cleanse, mirroring the
-    * reference's printed "Removed N duplicate rows / Filled N NULLs"
-    * audit (ecom_Silver_Layer.ipynb:196–246). */
-  case class DqMetrics(table: String, rowsIn: Long, rowsOut: Long,
-      dupsRemoved: Long, nullsFilled: Map[String, Long])
-
   /** Full-row dedup (U2; ipynb:198–199). */
   def dedup(df: DataFrame): DataFrame = df.dropDuplicates()
 
@@ -122,13 +116,12 @@ object Silver {
     * instant give negative days, which the golden file contains), NOT
     * `datediff` (which counts date boundaries). GoldenFixtureSpec pins
     * this bit-for-bit against the reference's published output. */
-  def cleanseLifecycle(raw: DataFrame, batchTs: java.sql.Timestamp,
-      numericFill: Double = 0.0): DataFrame = {
+  def cleanseLifecycle(raw: DataFrame, batchTs: java.sql.Timestamp): DataFrame = {
     val numericCols = raw.schema.fields.collect {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
     }
     val filled = fillNulls(dedup(raw),
-      overrides = numericCols.map(_ -> (numericFill: Any)).toMap)
+      overrides = numericCols.map(_ -> (0.0: Any)).toMap)
     // The raw text is explicitly UTC ('… UTC' suffix) but try_to_timestamp
     // interprets wall clocks in the SESSION zone — re-anchor through
     // to_utc_timestamp(…, sessionTz) so the parse is session-independent
@@ -149,18 +142,18 @@ object Silver {
   /** Observed DQ metrics: piggyback row/null/dup-proxy counters on a
     * pipeline stage with `Dataset.observe` — the counters ride the
     * existing job (accumulator-backed, zero extra passes over the
-    * data), where [[nullCounts]]/DqMetrics cost one dedicated
-    * aggregation job each. This is how a production Silver layer emits
-    * its audit counters at 100 TB: the cleanse job itself reports them,
-    * and a `QueryExecutionListener` (or `StreamingQueryListener` for
-    * streams) ships them to the metrics sink. The reference prints its
+    * data), where [[nullCounts]] costs one dedicated aggregation job.
+    * This is how a production Silver layer emits its audit counters at
+    * 100 TB: the cleanse job itself reports them, and a
+    * `QueryExecutionListener` (or `StreamingQueryListener` for streams)
+    * ships them to the metrics sink. The reference prints its
     * counters from driver-side pandas (ecom_Silver_Layer.ipynb:196–246);
     * this is that audit without the extra pass. */
   def observed(df: DataFrame, name: String, watchCols: Seq[String]): DataFrame =
     df.observe(name, count(lit(1)).as("rows"),
       watchCols.map(c => sum(col(c).isNull.cast("long")).as(s"nulls_$c")): _*)
 
-  /** Count nulls per column in one pass (for DqMetrics). */
+  /** Count nulls per column in one pass. */
   def nullCounts(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
     if (cols.isEmpty) return Map.empty
     val row = df.select(cols.map(c =>

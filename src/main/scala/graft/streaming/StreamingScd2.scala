@@ -27,8 +27,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: one shuffle on the business key (same as the batch join);
   * state is one version per live key. Surrogate keys are assigned at
-  * sink time from a key-range reservation (or the batch dense/
-  * monotonic options) — deliberately NOT in the stream, where global
+  * sink time from a key-range reservation (or the batch two-phase
+  * dense rank) — deliberately NOT in the stream, where global
   * contiguity would serialize.
   */
 object StreamingScd2 {

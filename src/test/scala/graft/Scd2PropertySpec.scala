@@ -10,7 +10,8 @@ import graft.operators.Scd2
   *  - exactly one current row per key present in the dimension,
   *  - [valid_from, valid_to) intervals per key are contiguous and
   *    non-overlapping,
-  *  - surrogate keys stay unique, and
+  *  - surrogate keys stay unique and dense (sorted SKs are 1..count),
+  *    and
   *  - replaying the SAME staging batch is a no-op (idempotence).
   * ScalaCheck generators driven directly with a fixed seed (the
   * scalatest-scalacheck bridge isn't in the offline cache).
@@ -63,6 +64,9 @@ class Scd2PropertySpec extends SparkSpec {
       // SKs unique
       val sks = merged.select("sk").as[Long].collect()
       assert(sks.distinct.length == sks.length, s"init=$init stage=$stage")
+      // SKs dense: the initial load numbers 1..n, the merge continues
+      assert(sks.sorted.toSeq == (1L to sks.length.toLong),
+        s"init=$init stage=$stage sks=${sks.sorted.toSeq}")
 
       // idempotence: replaying the same staging batch changes nothing
       val replay = Scd2.merge(merged, stage.toDF("id", "status"), cfg,
