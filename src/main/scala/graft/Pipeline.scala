@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bronze, Gold, Scd2, Silver}
@@ -19,8 +19,8 @@ import graft.operators.{Bronze, Gold, Scd2, Silver}
   * WRITE_TRUNCATE layer tables), so each layer is independently
   * queryable afterwards. Scale: bronze/silver/gold are scan-shaped
   * (the union is plan-level, the cleanse map-only after one dedup
-  * shuffle); the SCD2 step is one key-shuffled merge per batch with
-  * two-phase SK assignment — no stage funnels through the driver.
+  * shuffle); the SCD2 step is one key-shuffled window over both batches
+  * with two-phase SK assignment — no stage funnels through one task.
   *
   * Run: `sbt "runMain graft.Pipeline [rawCsv [outDir]]"`.
   */
@@ -69,23 +69,23 @@ object Pipeline {
     val silver = registerAnalyzed(spark, "graft_silver_lifecycle",
       s"$outDir/silver_lifecycle", Seq("order_id", "lifecycle_step"))
 
-    // ── SCD2: order dimension from the event stream as two CDC
-    // batches — early lifecycle (created/paid) is the initial load,
-    // late lifecycle (shipped/delivered) the merge batch, so orders
+    // ── SCD2: order dimension from the event stream as a two-batch
+    // CDC log — early lifecycle (created/paid) stamped a day before the
+    // batch, late lifecycle (shipped/delivered) at the batch, so orders
     // that progressed carry a closed + a current version, exactly
     // Scd_Type2.sql's close-and-insert shape ──────────────────────
     val cfg = Scd2.Config("order_id", Seq("order_status", "payment_value"),
       "order_sk")
-    def latestState(events: DataFrame) = Silver.dedupByKey(
+    def latestState(events: DataFrame, ts: Column) = Silver.dedupByKey(
         events, Seq("order_id"),
         Seq(col("lifecycle_step").desc, col("event_id")))
       .select(col("order_id"), col("event_type").as("order_status"),
-        col("payment_value"))
-    val batch1 = latestState(silver.filter(col("lifecycle_step") <= 2))
-    val batch2 = latestState(silver)
-    val t1 = to_timestamp(lit(batchTs)) - expr("INTERVAL 1 DAY")
-    val dim0 = Scd2.initialLoad(batch1, cfg, t1)
-    val history = Scd2.merge(dim0, batch2, cfg, to_timestamp(lit(batchTs)))
+        col("payment_value"), ts.as("ts"))
+    val loadTs = to_timestamp(lit(batchTs))
+    val log = latestState(silver.filter(col("lifecycle_step") <= 2),
+        loadTs - expr("INTERVAL 1 DAY"))
+      .unionByName(latestState(silver, loadTs))
+    val history = Scd2.history(log, cfg, "ts")
     history.write.mode("overwrite").parquet(s"$outDir/scd2_dim_order")
     val dimOrderHistory = registerAnalyzed(spark, "graft_dim_order",
       s"$outDir/scd2_dim_order", Seq("order_id", "order_status"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -25,13 +26,16 @@ import graft.sources.Tables
   *      so the reference only materializes a changed row's new version on
   *      the *next* run; we do the standard close-AND-insert in one pass.
   *
-  * Spark-first shape (no Delta in this environment): one shuffle joining
-  * staging↔current on the business key, a window for SK assignment, and
-  * a union — then an atomic `overwrite` of the dimension. At 100 TB the
-  * same plan holds: the join shuffles on the key (AQE skew-handled), and
-  * the history table is partitioned by `DATE(valid_from)` / bucketed by
-  * key on write (reference Scd_Type2.sql:91–92) so point-in-time reads
-  * prune.
+  * One derivation, [[history]]: a change log of (key, tracked columns,
+  * ts) becomes the history through one window on the key and one
+  * two-phase global rank for the SKs. [[initialLoad]] is the history of a
+  * one-batch log, [[merge]] the history of the current rows plus the
+  * staging batch, and the stream's `finalizeHistory` the history of its
+  * emitted version starts. At 100 TB the same plan holds: the window
+  * shuffles on the key (AQE skew-handled), the rank collects one long
+  * per range partition, and the history table is partitioned
+  * by `DATE(valid_from)` / bucketed by key on write (reference
+  * Scd_Type2.sql:91–92) so point-in-time reads prune.
   */
 object Scd2 {
   /** Open-ended `valid_to` sentinel. Deliberately NOT 9999-12-31: ns-based
@@ -54,82 +58,89 @@ object Scd2 {
     md5(concat_ws("\u0001",
       cfg.trackedCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
 
-  /** Initial dimension load: every staging row becomes the current
-    * version. Dense SKs via [[Relational.denseGlobalRank]] — a two-phase
-    * range-partition + broadcast-offset rank that is bit-identical to the
-    * single-partition `ROW_NUMBER() OVER (ORDER BY key)` (proven in
-    * Round7Spec) but never serializes the dimension through one task.
-    * The same rank continues the keys in [[merge]], so every SCD2 SK
-    * comes from one code path. */
-  def initialLoad(staging: DataFrame, cfg: Config, loadTs: Column): DataFrame =
-    opened(Relational.denseGlobalRank(staging, cfg.keyCol, cfg.skCol, 0L),
-      loadTs)
-
-  /** Stamp freshly-keyed rows as open versions starting at `loadTs`. */
-  private def opened(withSk: DataFrame, loadTs: Column): DataFrame =
-    withSk
-      .withColumn("valid_from", loadTs)
-      .withColumn("valid_to", to_timestamp(lit(FarFuture)))
-      .withColumn("is_current", lit(true))
-
-  /** One merge pass: `dim` is the full history table (current + closed
-    * rows), `staging` carries the key + tracked columns. Returns the new
-    * full history. */
-  def merge(dim: DataFrame, staging: DataFrame, cfg: Config,
-      loadTs: Column): DataFrame = {
-    val k = cfg.keyCol
-    val attrs = cfg.trackedCols
-    val dimCols = (Seq(k) ++ attrs ++ Seq(cfg.skCol, "valid_from",
+  /** The dimension's columns, in output order. */
+  private def dimCols(cfg: Config): Seq[Column] =
+    (Seq(cfg.keyCol) ++ cfg.trackedCols ++ Seq(cfg.skCol, "valid_from",
       "valid_to", "is_current")).map(col)
 
-    val current = dim.filter(col("is_current")).withColumn("__h", rowHash(cfg))
-    val history = dim.filter(!col("is_current"))
-    val src = staging.select(k, attrs: _*).withColumn("__h", rowHash(cfg))
+  /** The SCD2 history of a change log: `log` holds the key, the tracked
+    * columns and the change time `tsCol`, and may carry an SK column
+    * (`cfg.skCol`) on rows that are already versions.
+    *
+    *   - Per key, in `tsCol` order, a row starts a version when its
+    *     [[rowHash]] differs from the previous row's; an unchanged repeat
+    *     starts nothing.
+    *   - A version ends where the key's next version starts
+    *     (`valid_to`, [[FarFuture]] and `is_current` for the last).
+    *   - Tie rule: of several rows of one key at one `tsCol`, the one
+    *     with the greatest row hash is kept. Rows equal in hash are equal
+    *     in every tracked column (NULL reads as ''), so the result does
+    *     not depend on input order, and no version has zero length.
+    *   - Version starts without an SK are numbered in (`valid_from`, key)
+    *     order, continuing from the highest SK in the log (0 when there
+    *     is none); rows that carry an SK keep it.
+    *
+    * One window (`partitionBy(key).orderBy(ts)`: one shuffle, three
+    * passes over its sorted partitions) and one two-phase
+    * [[Relational.globalRankedPrefixSum]], the same kernel as
+    * [[Relational.denseGlobalRank]], counting only the starts that still
+    * need an SK. */
+  def history(log: DataFrame, cfg: Config, tsCol: String): DataFrame = {
+    val k = cfg.keyCol
+    val sk = col(cfg.skCol)
+    val hasSk = log.columns.contains(cfg.skCol)
+    // Scd_Type2.sql:34's scalar subquery → one collected scalar
+    val base =
+      if (hasSk) log.agg(coalesce(max(sk), lit(0L))).first().getLong(0)
+      else 0L
+    val byKey = Window.partitionBy(k).orderBy(col("valid_from"), col("__h"))
+    val starts = log
+      .select(col(k) +: cfg.trackedCols.map(col) :+
+        (if (hasSk) sk else lit(null).cast("long").as(cfg.skCol)) :+
+        col(tsCol).as("valid_from"): _*)
+      .withColumn("__h", rowHash(cfg))
+      // the tie rule: only the last row of each (key, ts) in window order
+      .withColumn("__tie",
+        coalesce(lead("valid_from", 1).over(byKey) === col("valid_from"),
+          lit(false)))
+      .filter(!col("__tie"))
+      .withColumn("__same",
+        coalesce(lag("__h", 1).over(byKey) === col("__h"), lit(false)))
+      .filter(!col("__same"))
+      .withColumn("valid_to", lead("valid_from", 1).over(byKey))
+      .withColumn("__ord", struct(col("valid_from"), col(k)))
+      .withColumn("__new", when(sk.isNull, 1L).otherwise(0L))
+    Relational.globalRankedPrefixSum(starts, "__ord", "__new", "__rank",
+        "__cum")
+      .withColumn(cfg.skCol, coalesce(sk, col("__cum") + lit(base)))
+      .withColumn("is_current", col("valid_to").isNull)
+      .withColumn("valid_to",
+        coalesce(col("valid_to"), to_timestamp(lit(FarFuture))))
+      .select(dimCols(cfg): _*)
+  }
 
-    // staging ⟕ current on the business key: classify each source row.
-    // Checkpointed (r10): `classified` feeds THREE consumers (changed →
-    // insertRows + changedKeys, fresh → insertRows) across SEPARATE
-    // driver actions (the SK rank's range-sampling job, its checkpoint
-    // write, and the final union) — exchange reuse only dedups within
-    // one job, so the staging⋈current join (which itself re-executes
-    // the full `dim` lineage through `current`) ran up to 4×.
-    // NOTE: the checkpoint makes merge() EAGER (dim/staging lineage
-    // executes at call time) and pins executor storage blocks until
-    // GC; callers that build long multi-merge chains lazily should
-    // checkpoint to the cluster store instead (the components()
-    // deployment swap documented on Graphs.components).
-    val curKeyed = current.select(col(k).as("__ck"), col("__h").as("__ch"))
-    val classified = src.join(curKeyed, col(k) === col("__ck"), "left")
-      .localCheckpoint()
-    val changed = classified.filter(col("__ck").isNotNull && col("__h") =!= col("__ch"))
-    val fresh = classified.filter(col("__ck").isNull)
+  /** Initial dimension load: the history of `staging` as a one-batch log
+    * at `loadTs` — one current version per key, SKs 1..n in key order. */
+  def initialLoad(staging: DataFrame, cfg: Config, loadTs: Column): DataFrame =
+    history(staging.withColumn("valid_from", loadTs), cfg, "valid_from")
 
-    // inserts = changed ∪ fresh, SKs continuing from MAX(existing)
-    // (Scd_Type2.sql:34's scalar subquery → one driver scalar; at scale
-    // this is a metadata-sized agg, not a data motion — a dimension
-    // fresh from initialLoad answers it from the rank's checkpoint plus
-    // one per-partition window, never re-running the staging lineage).
-    val maxSk =
-      dim.agg(coalesce(max(col(cfg.skCol)), lit(0L))).first().getLong(0)
-    val insertRows = changed.unionByName(fresh)
-      .select(col(k) +: attrs.map(col): _*)
-    // SK continuation via the same two-phase global rank as initialLoad
-    // (base = MAX(existing)): no single-partition WindowExec anywhere in
-    // the merge, so a wide dimension merge parallelizes across the range
-    // partitions instead of serializing through one task.
-    val inserts = opened(
-      Relational.denseGlobalRank(insertRows, k, cfg.skCol, maxSk), loadTs)
-
-    // close changed current rows; keep unchanged current rows
-    val changedKeys = changed.select(col(k).as("__k")).distinct()
-    val closed = current.join(changedKeys, col(k) === col("__k"), "left_semi")
-      .withColumn("valid_to", loadTs)
-      .withColumn("is_current", lit(false))
-    val unchanged = current.join(changedKeys, col(k) === col("__k"), "left_anti")
-
-    Seq(history, closed, unchanged, inserts)
-      .map(_.select(dimCols: _*))
-      .reduce(_.unionByName(_))
+  /** One merge pass: `dim` is the full history table (current + closed
+    * rows), `staging` carries the key + tracked columns, stamped at
+    * `loadTs` (later than every version in `dim`). Returns the new full
+    * history: the closed rows as they are, plus the [[history]] of the
+    * current rows and the staging batch. Existing versions keep their
+    * SKs; new ones continue from the current rows' maximum, which is the
+    * dimension's maximum, since every version this object starts gets a
+    * larger SK than the one it closes. */
+  def merge(dim: DataFrame, staging: DataFrame, cfg: Config,
+      loadTs: Column): DataFrame = {
+    val keyed = (cfg.keyCol +: cfg.trackedCols).map(col)
+    val log = dim.filter(col("is_current"))
+      .select(keyed :+ col(cfg.skCol) :+ col("valid_from"): _*)
+      .unionByName(staging.select(keyed :+
+        lit(null).cast("long").as(cfg.skCol) :+ loadTs.as("valid_from"): _*))
+    dim.filter(!col("is_current")).select(dimCols(cfg): _*)
+      .unionByName(history(log, cfg, "valid_from"))
   }
 
   /** The "latest version" view every consumer reads by default. */
@@ -158,9 +169,9 @@ object Scd2 {
     val initial = o.filter(col("order_id") % 10 < 8)
     val staging = o.withColumn("order_status",
       when(col("order_id") % 5 === 0, lit("D")).otherwise(col("order_status")))
-    // dim0's rank already sits on a localCheckpoint, so merge()'s four
-    // dim0 branches (current, history, closed, unchanged) and its MAX(sk)
-    // probe read the checkpoint, not the orders scan
+    // dim0's rank already sits on a localCheckpoint, so merge()'s two
+    // dim0 branches (closed rows, the current rows in its log) and its
+    // MAX(sk) probe read the checkpoint, not the orders scan
     merge(initialLoad(initial, cfg, t1), staging, cfg, t2)
   }
 

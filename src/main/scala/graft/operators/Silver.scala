@@ -47,16 +47,6 @@ object Silver {
   def parseTimestamp(c: Column, formats: Seq[String] = defaultFormats): Column =
     coalesce(formats.map(f => try_to_timestamp(c, lit(f))): _*)
 
-  /** Numeric coercion with NULL-on-fail + default fill (F14; reference
-    * app.py:94 `to_numeric(errors='coerce').fillna(default)`). ANSI-safe
-    * via try_cast. */
-  def coerceNumeric(c: Column, default: Double): Column =
-    coalesce(c.try_cast(DoubleType), lit(default))
-
-  def parseTimestamps(df: DataFrame, cols: Seq[String],
-      formats: Seq[String] = defaultFormats): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, parseTimestamp(col(c), formats)))
-
   /** Median fill for numeric columns in ONE aggregation pass (A14/F15;
     * ipynb:204–214 loops per column in the driver — here all
     * percentile_approx sketches ride a single job), plus constant fills:

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Scd2
+
 /** SCD Type 2 as a stream — the §2.9 → §2.10 bridge SURVEY.md maps out:
   * the same close-and-insert semantics as [[graft.operators.Scd2]], but
   * maintained incrementally per key with `flatMapGroupsWithState`
@@ -19,17 +21,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Emission protocol (append mode can't dump final state): every state
   * change also emits the new OPEN version as a `is_current = true` row
-  * with `valid_to = null`; [[finalizeHistory]] then keeps all closed
-  * rows plus the latest open row per key, preferring the closed copy
-  * when a version was later closed. `StreamingScd2Spec` proves the
-  * result equals the batch merge's history exactly (modulo surrogate
-  * keys, which need a global assignment by construction).
+  * with `valid_to = null`, so each version start is emitted exactly once;
+  * [[finalizeHistory]] is the batch [[graft.operators.Scd2.history]] of
+  * those starts. `StreamingScd2Spec` proves the result equals the batch
+  * merge's history exactly, surrogate keys included.
   *
-  * Scale: one shuffle on the business key (same as the batch join);
+  * Scale: one shuffle on the business key (same as the batch window);
   * state is one version per live key. Surrogate keys are assigned at
-  * sink time from a key-range reservation (or the batch two-phase
-  * dense rank) — deliberately NOT in the stream, where global
-  * contiguity would serialize.
+  * sink time by the batch two-phase rank — deliberately NOT in the
+  * stream, where global contiguity would serialize.
   */
 object StreamingScd2 {
 
@@ -85,8 +85,7 @@ object StreamingScd2 {
     * exactly how a scheduled production drain of a CDC bucket runs.
     * Emissions append to a parquet sink across both drains; the final
     * history is a batch read of that sink. Output = the full history
-    * minus surrogate keys (a sink-time global assignment by design),
-    * oracle-checked as q55. */
+    * without the surrogate keys, oracle-checked as q55. */
   def ordersScenarioStream(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
@@ -127,29 +126,19 @@ object StreamingScd2 {
       .write.mode("append").parquet(land)
     drain()
 
-    finalizeHistory(spark.read.parquet(out), graft.operators.Scd2.FarFuture)
+    finalizeHistory(spark.read.parquet(out), Scd2.FarFuture)
       .select(col("key").as("order_id"), col("status").as("order_status"),
         col("price").as("total_price"), col("priority"),
         col("valid_from"), col("valid_to"), col("is_current"))
       .orderBy("order_id", "valid_from")
   }
 
-  /** Collapse the emission log into the history table: all closed rows,
-    * plus the latest open row per key unless that same version was
-    * later closed (closed copy wins). */
-  def finalizeHistory(emitted: DataFrame, farFuture: String): DataFrame = {
-    val closed = emitted.filter(!col("is_current"))
-    val open = emitted.filter(col("is_current"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("key")
-          .orderBy(desc("valid_from"))))
-      .filter(col("rn") === 1).drop("rn")
-      .join(closed.select(col("key").as("ck"),
-        col("valid_from").as("cf")),
-        col("key") === col("ck") && col("valid_from") === col("cf"),
-        "left_anti")
-    closed.unionByName(open)
-      .withColumn("valid_to",
-        coalesce(col("valid_to"), to_timestamp(lit(farFuture))))
-  }
+  /** The history table of an emission log: the batch SCD2 history of
+    * its version starts (the `is_current` rows), with SKs, and
+    * `farFuture` as the open end. */
+  def finalizeHistory(emitted: DataFrame, farFuture: String): DataFrame =
+    Scd2.history(emitted.filter(col("is_current")),
+        Scd2.Config("key", Seq("status", "price", "priority")), "valid_from")
+      .withColumn("valid_to", when(col("is_current"),
+        to_timestamp(lit(farFuture))).otherwise(col("valid_to")))
 }

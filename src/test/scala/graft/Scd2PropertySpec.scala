@@ -12,7 +12,10 @@ import graft.operators.Scd2
   *    non-overlapping,
   *  - surrogate keys stay unique and dense (sorted SKs are 1..count),
   *    and
-  *  - replaying the SAME staging batch is a no-op (idempotence).
+  *  - replaying the SAME staging batch is a no-op (idempotence), and
+  *  - a staging batch that repeats keys still leaves one current row
+  *    per key, the same whatever the input order (the tie rule of
+  *    `Scd2.history`).
   * ScalaCheck generators driven directly with a fixed seed (the
   * scalatest-scalacheck bridge isn't in the offline cache).
   */
@@ -75,6 +78,39 @@ class Scd2PropertySpec extends SparkSpec {
       assert(replay.filter($"valid_from" === ts("2024-03-01 00:00:00"))
         .count() == 0, s"init=$init stage=$stage")
       merged.unpersist()
+    }
+  }
+
+  test("tie rule: a staging batch that repeats keys gives one current " +
+      "row per key, whatever the input order") {
+    val dupRowsGen: Gen[List[(Long, String)]] = for {
+      n <- Gen.choose(1, 12)
+      ids <- Gen.listOfN(n, Gen.choose(1L, 6L)) // repeats by construction
+      sts <- Gen.listOfN(n, statusGen)
+    } yield ids.zip(sts)
+    var seed = rng.Seed(7L)
+    def sample[A](g: Gen[A]): A = {
+      val v = g.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      v
+    }
+    for (i <- 1 to 10) {
+      val init = sample(rowsGen)
+      val stage = sample(dupRowsGen)
+      def merged(rows: List[(Long, String)]) = Scd2.merge(
+        Scd2.initialLoad(init.toDF("id", "status"), cfg,
+          ts("2024-01-01 00:00:00")),
+        rows.toDF("id", "status").repartition(3), cfg,
+        ts("2024-02-01 00:00:00"))
+        .as[(Long, String, Long, java.sql.Timestamp, java.sql.Timestamp,
+          Boolean)].collect().toSet
+      val got = merged(stage)
+      val current = got.toSeq.filter(_._6).map(_._1)
+      assert(current.sorted == (init.map(_._1) ++ stage.map(_._1)).distinct
+        .sorted, s"init=$init stage=$stage")
+      val shuffled = new scala.util.Random(i).shuffle(stage)
+      assert(merged(shuffled) == got, s"init=$init stage=$shuffled")
+      assert(merged(stage.reverse) == got, s"init=$init stage=${stage.reverse}")
     }
   }
 }

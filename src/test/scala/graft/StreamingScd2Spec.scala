@@ -11,9 +11,8 @@ import graft.streaming.StreamingScd2
 import graft.streaming.StreamingScd2.CdcRow
 
 /** Streaming SCD2 ≡ batch SCD2: the q23 scenario fed as two CDC
-  * micro-batches produces the exact history the batch merge builds
-  * (modulo surrogate keys, which are a global sink-time assignment by
-  * design — see StreamingScd2 scaladoc).
+  * micro-batches produces the exact history the batch merge builds,
+  * surrogate keys included.
   */
 class StreamingScd2Spec extends SparkSpec {
   import spark.implicits._
@@ -51,11 +50,12 @@ class StreamingScd2Spec extends SparkSpec {
       .finalizeHistory(spark.table(sink), Scd2.FarFuture)
       .select(col("key").as("order_id"), col("status").as("order_status"),
         col("price").as("total_price"), col("priority"),
+        col("sk").as("order_sk"),
         col("valid_from"), col("valid_to"), col("is_current"))
 
     val batch = Scd2.ordersHistory(spark, dir)
       .select("order_id", "order_status", "total_price", "priority",
-        "valid_from", "valid_to", "is_current")
+        "order_sk", "valid_from", "valid_to", "is_current")
 
     val s = streamed.collect().map(_.toSeq).toSet
     val b = batch.collect().map(_.toSeq).toSet
