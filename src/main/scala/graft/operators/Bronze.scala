@@ -38,11 +38,12 @@ object Bronze {
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** S4: truncate-load of the combined raw table (the reference's
-    * WRITE_TRUNCATE into bronze.raw_Brazilian_data). */
+    * WRITE_TRUNCATE into bronze.raw_Brazilian_data), read back with the
+    * schema just written — no inference pass over the parquet. */
   def loadRaw(spark: SparkSession, pathsByName: Map[String, String],
       outPath: String): DataFrame = {
     val raw = rawUnion(readTagged(spark, pathsByName).values.toSeq)
     raw.write.mode("overwrite").parquet(outPath)
-    spark.read.parquet(outPath)
+    spark.read.schema(raw.schema).parquet(outPath)
   }
 }

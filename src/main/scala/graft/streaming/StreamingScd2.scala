@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -17,7 +19,11 @@ import graft.operators.Scd2
   * valid_from). Each change event either starts the first version,
   * closes the open version and opens a new one (emitting both), or is
   * an unchanged no-op — the same three branches as the batch MERGE
-  * (reference Scd_Type2.sql:38–53), minus the re-join.
+  * (reference Scd_Type2.sql:38–53), minus the re-join. Ties follow
+  * [[graft.operators.Scd2.history]]'s rule: of a key's events at one
+  * ts the greatest row hash wins, within a micro-batch and against the
+  * open version's own start from an earlier one (a greater hash
+  * re-emits the start at that ts, with no close).
   *
   * Emission protocol (append mode can't dump final state): every state
   * change also emits the new OPEN version as a `is_current = true` row
@@ -41,25 +47,52 @@ object StreamingScd2 {
       priority: String, valid_from: Timestamp, valid_to: Option[Timestamp],
       is_current: Boolean)
 
+  /** [[graft.operators.Scd2.rowHash]] of one row's tracked values,
+    * computed in Scala: the order of the tie rule. */
+  def rowHash(status: String, price: Double, priority: String): String =
+    MessageDigest.getInstance("MD5")
+      .digest(Seq(status, price.toString, priority)
+        .map(v => Option(v).getOrElse("")).mkString("\u0001")
+        .getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  private def rowHash(r: CdcRow): String = rowHash(r.status, r.price, r.priority)
+
+  /** One key's events in ts order, one per ts. The batch tie rule: of
+    * several rows at one ts the greatest [[rowHash]] wins; hashes are
+    * computed only where two rows share a ts. */
+  private def tieResolved(rows: Seq[CdcRow]): List[CdcRow] =
+    rows.sortWith(_.ts before _.ts)
+      .foldRight(List.empty[CdcRow]) {
+        case (r, next :: rest) if r.ts == next.ts =>
+          (if (rowHash(r) > rowHash(next)) r else next) :: rest
+        case (r, acc) => r :: acc
+      }
+
   def update(key: Long, rows: Iterator[CdcRow],
       state: GroupState[OpenVersion]): Iterator[VersionRow] = {
     var out = List.empty[VersionRow]
     var cur = state.getOption
-    rows.toSeq.sortBy(_.ts.getTime).foreach { r =>
+    def open(r: CdcRow): Unit = {
+      cur = Some(OpenVersion(r.status, r.price, r.priority, r.ts))
+      out ::= VersionRow(key, r.status, r.price, r.priority, r.ts,
+        None, is_current = true)
+    }
+    tieResolved(rows.toSeq).foreach { r =>
       cur match {
-        case None =>
-          cur = Some(OpenVersion(r.status, r.price, r.priority, r.ts))
-          out ::= VersionRow(key, r.status, r.price, r.priority, r.ts,
-            None, is_current = true)
+        case None => open(r)
         case Some(c)
-            if c.status != r.status || c.price != r.price
-              || c.priority != r.priority =>
+            if c.status == r.status && c.price == r.price
+              && c.priority == r.priority =>
+          () // unchanged: no new version (same as batch merge)
+        case Some(c) if c.from == r.ts =>
+          // a tie with the open version's own start, from an earlier
+          // micro-batch: the greater hash replaces that start
+          if (rowHash(r) > rowHash(c.status, c.price, c.priority)) open(r)
+        case Some(c) =>
           out ::= VersionRow(key, c.status, c.price, c.priority, c.from,
             Some(r.ts), is_current = false)
-          cur = Some(OpenVersion(r.status, r.price, r.priority, r.ts))
-          out ::= VersionRow(key, r.status, r.price, r.priority, r.ts,
-            None, is_current = true)
-        case _ => () // unchanged: no new version (same as batch merge)
+          open(r)
       }
     }
     cur.foreach(state.update)

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,6 +17,9 @@ import org.apache.spark.sql.functions._
   * every lifecycle stage, plus one order whose created/paid events
   * landed in an earlier file, so the SCD2 merge inserts both changed
   * and fresh keys.
+  *
+  * It also holds the pipeline's CBO wiring on this input (PipelineCboSpec
+  * needs the reference's raw file) and its Spark job budget.
   */
 class PipelineRunSpec extends SparkSpec {
   import spark.implicits._
@@ -39,14 +46,19 @@ class PipelineRunSpec extends SparkSpec {
     "event_timestamp,customer_name,customer_email,customer_city," +
     "customer_state,payment_value,lifecycle_step"
 
-  private lazy val out = {
+  /** `Pipeline.run` on `lines` under a fresh temp dir; the result and
+    * the layers' directory. */
+  private def runOn(lines: Seq[String]): (Pipeline.Result, String) = {
     val dir = Files.createTempDirectory("graft_pipeline_run_spec")
     dir.toFile.deleteOnExit()
     val csv = dir.resolve("synthetic_order_lifecycle.csv")
-    Files.write(csv, (header +: events).mkString("\n")
+    Files.write(csv, (header +: lines).mkString("\n")
       .getBytes(StandardCharsets.UTF_8))
-    Pipeline.run(spark, csv.toString, dir.resolve("layers").toString, batchTs)
+    val layers = dir.resolve("layers").toString
+    (Pipeline.run(spark, csv.toString, layers, batchTs), layers)
   }
+
+  private lazy val out = runOn(events)._1
 
   test("the fixture has every stage, one duplicate, one bad timestamp") {
     val steps = events.map(_.split(",").last.toInt).toSet
@@ -62,6 +74,47 @@ class PipelineRunSpec extends SparkSpec {
     val funnel = out.funnel.collect()
       .map(r => r.getAs[String]("stage") -> r.getAs[Long]("n_events")).toMap
     assert(funnel == stages.map(s => s -> oracle.getOrElse(s, 0L)).toMap)
+
+    // zero-fill: a stage with no events still has its row, in rank order
+    val (_, layers) = runOn(events.filterNot(_.contains("order_delivered")))
+    val mart = spark.read.parquet(s"$layers/mart_funnel")
+      .as[(String, Int, Long)].collect().toSeq
+    assert(mart.map(_._1) == stages)
+    assert(mart.map(_._2) == (1 to 4))
+    assert(mart.last._3 == 0L && mart.init.forall(_._3 > 0))
+  }
+
+  test("catalog tables carry the written row count and schema; the " +
+      "fact⋈current-dim join broadcasts from them with AQE off") {
+    out // the tables of whichever run in this suite published last
+    val catalog = spark.sessionState.catalog
+    Seq("graft_silver_lifecycle", "graft_dim_order",
+        "graft_fact_order_lifecycle").foreach { t =>
+      val meta = catalog.getTableMetadata(TableIdentifier(t))
+      assert(meta.stats.flatMap(_.rowCount).contains(
+        BigInt(spark.table(t).count())), t)
+      assert(meta.schema == spark.read.parquet(meta.location.toString).schema, t)
+    }
+
+    val conf = spark.conf
+    val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.cbo.enabled")
+      .map(k => k -> conf.getOption(k))
+    try {
+      conf.set("spark.sql.adaptive.enabled", "false")
+      conf.set("spark.sql.cbo.enabled", "true")
+      val q = spark.table("graft_fact_order_lifecycle")
+        .join(spark.table("graft_dim_order").filter($"is_current"),
+          Seq("order_id"))
+        .groupBy("order_status").agg(count(lit(1)).as("n"))
+      val leafStats = q.queryExecution.optimizedPlan.collectLeaves().map(_.stats)
+      assert(leafStats.exists(_.rowCount.isDefined), leafStats)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"), plan)
+      assert(q.count() > 0)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
   test("SCD2 history: one current row per order, closed intervals abut") {
@@ -95,5 +148,27 @@ class PipelineRunSpec extends SparkSpec {
     assert(insertedSorted.map(_._1).toSeq == Seq(30, 35, 40, 50))
     assert(insertedSorted.map(_._2).toSeq ==
       (initial.length + 1L to rows.length.toLong))
+  }
+
+  /** Counted with a SparkListener after a warm-up run: 31 jobs before
+    * the catalog stats and the funnel were observed on the layer writes
+    * (each catalog table ran CREATE TABLE's schema inference and
+    * ANALYZE … FOR COLUMNS, the mart a group-by, a broadcast join and a
+    * range sort, Bronze a parquet schema inference), 17 since. */
+  test("one Pipeline.run stays within its Spark job budget") {
+    val sc = spark.sparkContext
+    runOn(events)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      runOn(events)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 17, s"${jobs.get} Spark jobs")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.security.MessageDigest
 import java.sql.Timestamp
 
 import scala.collection.mutable
@@ -24,11 +23,9 @@ import graft.streaming.StreamingScd2.CdcRow
   *    per log batch, then `finalizeHistory`.
   * The logs have keys that appear and disappear, unchanged repeats,
   * NULL attributes and the tie rule's duplicates (one key several times
-  * in one batch).
-  *
-  * The stream is fed each batch after the tie rule: `StreamingScd2.update`
-  * resolves a key's duplicates within one micro-batch by arrival order,
-  * not by the rule, a known defect of the stream's write side.
+  * in one batch), and every derivation, the stream included, gets them
+  * raw. The model orders ties by `StreamingScd2.rowHash`, which must
+  * equal `Scd2.rowHash` on every generated row.
   */
 class Scd2ModelSpec extends SparkSpec {
   import spark.implicits._
@@ -40,11 +37,7 @@ class Scd2ModelSpec extends SparkSpec {
 
   /** `Scd2.rowHash`, one row at a time. */
   private def hash(r: CdcRow): String =
-    MessageDigest.getInstance("MD5")
-      .digest(Seq(r.status, r.price.toString, r.priority)
-        .map(v => Option(v).getOrElse("")).mkString("\u0001")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    StreamingScd2.rowHash(r.status, r.price, r.priority)
 
   /** The tie rule: per key and ts, the greatest hash wins. */
   private def tieResolved(rows: Seq[CdcRow]): Seq[CdcRow] =
@@ -98,9 +91,8 @@ class Scd2ModelSpec extends SparkSpec {
     val q = StreamingScd2.versions(input.toDS())
       .writeStream.outputMode("append").format("memory").queryName(name)
       .trigger(Trigger.ProcessingTime(0)).start()
-    try batches.foreach { b =>
-      input.addData(tieResolved(b)); q.processAllAvailable()
-    } finally q.stop()
+    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    finally q.stop()
     StreamingScd2.finalizeHistory(spark.table(name), Scd2.FarFuture)
   }
 
@@ -117,6 +109,8 @@ class Scd2ModelSpec extends SparkSpec {
       val log = batches.flatten
       val want = model(log, farFuture)
       val ctx = s"log=${batches.map(_.mkString(", ")).mkString("\n")}"
+      assert(log.toDF().select(Scd2.rowHash(cfg)).as[String].collect().toSeq ==
+        log.map(hash), ctx)
 
       assert(versions(Scd2.history(log.toDF(), cfg, "ts")) == want, ctx)
 

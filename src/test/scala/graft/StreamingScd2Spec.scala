@@ -65,4 +65,42 @@ class StreamingScd2Spec extends SparkSpec {
       s"only-streaming: $onlyS\nonly-batch: $onlyB"
     })
   }
+
+  test("ties at one ts follow the batch rule, within a micro-batch and " +
+      "across micro-batches") {
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
+    val t2 = Timestamp.valueOf("2024-06-01 00:00:00")
+    def row(status: String, ts: Timestamp) =
+      CdcRow(1L, status, 10.0, "1-URGENT", ts)
+    // b wins a tie with a
+    assert(StreamingScd2.rowHash("b", 10.0, "1-URGENT") >
+      StreamingScd2.rowHash("a", 10.0, "1-URGENT"))
+    val cases = Seq(
+      Seq(Seq(row("b", t1), row("a", t1)), Seq(row("a", t2))),
+      Seq(Seq(row("a", t1), row("b", t1)), Seq(row("a", t2))),
+      Seq(Seq(row("b", t1)), Seq(row("a", t1)), Seq(row("a", t2))),
+      Seq(Seq(row("a", t1)), Seq(row("b", t1)), Seq(row("a", t2))))
+    val cfg = Scd2.Config("key", Seq("status", "price", "priority"))
+    def history(df: org.apache.spark.sql.DataFrame) =
+      df.select("status", "sk", "valid_from", "valid_to", "is_current")
+        .as[(String, Long, Timestamp, Timestamp, Boolean)].collect().toSet
+
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    cases.zipWithIndex.foreach { case (batches, i) =>
+      val input = MemoryStream[CdcRow]
+      val sink = s"streaming_scd2_ties_$i"
+      val q = StreamingScd2.versions(input.toDS())
+        .writeStream.outputMode("append").format("memory").queryName(sink)
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      val streamed = history(
+        StreamingScd2.finalizeHistory(spark.table(sink), Scd2.FarFuture))
+      val batch = history(Scd2.history(batches.flatten.toDF(), cfg, "ts"))
+      assert(streamed == batch, s"case $i: $batches")
+      // b from t1 to t2, then a
+      assert(batch.map(v => (v._1, v._3, v._5)) ==
+        Set(("b", t1, false), ("a", t2, true)), s"case $i")
+    }
+  }
 }
