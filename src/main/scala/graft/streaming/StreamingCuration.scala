@@ -82,9 +82,8 @@ object StreamingCuration {
     s"/tmp/graft-curstream-run-$key-p$pid"
   }
 
-  /** ONE maintainer step, shared by the gated two-batch replay
-    * ([[curationStream]]) and the sustained soak
-    * ([[CurationSoak]]): resolve the state as of epochs < `batchId`
+  /** ONE maintainer step of the gated two-batch replay
+    * ([[curationStream]]): resolve the state as of epochs < `batchId`
     * (the replay-safe bound — a crashed batch's partial table commits
     * are invisible), run the incremental step on this batch's upserts +
     * tombstones, and commit ONLY the keyed deltas into the five

@@ -19,9 +19,8 @@ import graft.sources.Tables
   * Scale: the streaming state is the (event_type, bucket) count table —
   * a few dozen rows regardless of rate; per micro-batch the update is
   * one map-side-combined partial count. The PSI combine runs over that
-  * reduced grain. Nothing corpus-sized is stored or shuffled, which is
-  * why this monitor can ride a 2M events/s feed (the Soak harness
-  * measures that envelope for the same keyed-agg shape).
+  * reduced grain. Nothing corpus-sized is stored or shuffled, so the
+  * monitor's cost follows the feed's rate, not the corpus.
   */
 object StreamingDrift {
 

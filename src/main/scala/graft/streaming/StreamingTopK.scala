@@ -16,8 +16,7 @@ import graft.util.Portable
   *
   * State is the (user_id → integer-cents revenue, purchase count)
   * table: entity-grain, independent of event rate — each micro-batch
-  * contributes one map-side-combined partial sum, the same keyed-agg
-  * shape the Soak harness sustains at ~2M events/s. Ranking runs over
+  * contributes one map-side-combined partial sum. Ranking runs over
   * the reduced state, never the feed. For key domains too large to
   * hold (open-world ids at 100 TB), the bounded-memory composition is
   * q94's Misra-Gries candidate pass in front of this exact keyed agg;

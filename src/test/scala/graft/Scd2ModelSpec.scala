@@ -15,17 +15,19 @@ import graft.streaming.StreamingScd2
 import graft.streaming.StreamingScd2.CdcRow
 
 /** SCD2 against a plain-Scala, row-at-a-time model. On generated change
-  * logs of 3–5 batches, three derivations must equal the model,
+  * logs of 3–5 batches, four derivations must equal the model,
   * surrogate keys included:
   *  - `Scd2.history` of the whole log;
   *  - `initialLoad` of the first batch, then one `merge` per later batch;
   *  - `StreamingScd2.versions` over a `MemoryStream`, one micro-batch
-  *    per log batch, then `finalizeHistory`.
+  *    per log batch, then `finalizeHistory`;
+  *  - the same stream fed the log's rows shuffled across as many
+  *    micro-batches, so events arrive late and out of order.
   * The logs have keys that appear and disappear, unchanged repeats,
   * NULL attributes and the tie rule's duplicates (one key several times
   * in one batch), and every derivation, the stream included, gets them
-  * raw. The model orders ties by `StreamingScd2.rowHash`, which must
-  * equal `Scd2.rowHash` on every generated row.
+  * raw. The model orders ties by the hashes Spark's `Scd2.rowHash`
+  * gives the generated rows.
   */
 class Scd2ModelSpec extends SparkSpec {
   import spark.implicits._
@@ -35,24 +37,29 @@ class Scd2ModelSpec extends SparkSpec {
 
   private val cfg = Scd2.Config("key", Seq("status", "price", "priority"))
 
-  /** `Scd2.rowHash`, one row at a time. */
-  private def hash(r: CdcRow): String =
-    StreamingScd2.rowHash(r.status, r.price, r.priority)
+  /** `Scd2.rowHash` of each row of `log`, computed by Spark. */
+  private def hashes(log: Seq[CdcRow]): CdcRow => String = {
+    val h = log.map(r => (r.status, r.price, r.priority))
+      .zip(log.toDF().select(Scd2.rowHash(cfg)).as[String].collect()).toMap
+    r => h((r.status, r.price, r.priority))
+  }
 
   /** The tie rule: per key and ts, the greatest hash wins. */
-  private def tieResolved(rows: Seq[CdcRow]): Seq[CdcRow] =
+  private def tieResolved(rows: Seq[CdcRow],
+      hash: CdcRow => String): Seq[CdcRow] =
     rows.groupBy(r => (r.key, r.ts)).values.map(_.maxBy(hash)).toSeq
 
   /** Batches in time order, keys in order within one; a version starts
     * where the key's hash changes and ends where its next one starts;
     * SKs count the starts. */
   private def model(log: Seq[CdcRow], farFuture: Timestamp): Set[Version] = {
+    val hash = hashes(log)
     def version(r: CdcRow, sk: Long, to: Timestamp, current: Boolean) =
       (r.key, r.status, r.price, r.priority, sk, r.ts, to, current)
     val open = mutable.Map.empty[Long, (CdcRow, Long)]
     val closed = mutable.Buffer.empty[Version]
     var sk = 0L
-    for (r <- tieResolved(log).sortBy(r => (r.ts.getTime, r.key))) {
+    for (r <- tieResolved(log, hash).sortBy(r => (r.ts.getTime, r.key))) {
       open.get(r.key) match {
         case Some((o, _)) if hash(o) == hash(r) => ()
         case prev =>
@@ -105,12 +112,16 @@ class Scd2ModelSpec extends SparkSpec {
       seed = seed.next
       v
     }
+    // each log's rows in a seeded random order, cut into as many
+    // micro-batches as the log has batches
+    val arrivals = logs.zipWithIndex.map { case (batches, i) =>
+      val rows = new scala.util.Random(i).shuffle(batches.flatten)
+      rows.grouped((rows.size + batches.size - 1) / batches.size).toSeq
+    }
     logs.zipWithIndex.foreach { case (batches, i) =>
       val log = batches.flatten
       val want = model(log, farFuture)
       val ctx = s"log=${batches.map(_.mkString(", ")).mkString("\n")}"
-      assert(log.toDF().select(Scd2.rowHash(cfg)).as[String].collect().toSeq ==
-        log.map(hash), ctx)
 
       assert(versions(Scd2.history(log.toDF(), cfg, "ts")) == want, ctx)
 
@@ -122,13 +133,23 @@ class Scd2ModelSpec extends SparkSpec {
       assert(versions(merged) == want, ctx)
 
       assert(versions(streamed(batches, s"scd2_model_$i")) == want, ctx)
+
+      val late = arrivals(i)
+      assert(versions(streamed(late, s"scd2_model_late_$i")) == want,
+        s"$ctx\narrival=${late.map(_.mkString(", ")).mkString("\n")}")
     }
     // the generated logs exercise what the model distinguishes
     val all = logs.map(_.map(b => b.groupBy(_.key)))
     assert(all.exists(_.exists(_.values.exists(_.size > 1))), "no duplicate")
     assert(all.exists(bs => bs.zip(bs.tail).exists { case (a, b) =>
       !a.keySet.subsetOf(b.keySet) }), "no key that disappears")
-    assert(logs.exists(bs => model(bs.flatten, farFuture).size <
-      tieResolved(bs.flatten).size), "no unchanged repeat")
+    assert(logs.exists { bs =>
+      val log = bs.flatten
+      model(log, farFuture).size < tieResolved(log, hashes(log)).size
+    }, "no unchanged repeat")
+    assert(arrivals.exists(bs => bs.zipWithIndex.exists { case (b, j) =>
+      bs.drop(j + 1).flatten.exists(l =>
+        b.exists(r => r.key == l.key && l.ts.before(r.ts)))
+    }), "no late arrival")
   }
 }
