@@ -18,9 +18,8 @@ object Bench {
     // hash table — SPARK_GRAFT_SHUFFLE decouples partition count from
     // parallelism (defaults stay tied, matching every prior record)
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = graft.util.Sessions.withGraftDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions))
+    val spark = graft.util.Sessions.local(cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
       // The testdata tables are SINGLE small parquet files; at the
@@ -30,9 +29,6 @@ object Bench {
       // split size reproduces that parallelism honestly at local scale.
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAXPART", (2 * 1024 * 1024).toString))
-      // bench what ships: custom functions, optimizer rule, and the
-      // TopKPerKey strategy are active exactly as in Verify
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

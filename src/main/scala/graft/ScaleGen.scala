@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Self-generated 10× scaling fixture (the round-6 verdict's "measure
@@ -50,10 +50,7 @@ object ScaleGen {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args.drop(3).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.util.Sessions.withGraftDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // all divisible by 2100 — see the construction contract above

@@ -116,11 +116,7 @@ object TrainingPipeline {
     val outDir = args.lift(1).getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_training_pipeline")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Sessions.withGraftDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, dir, outDir)
     println(s"verdicts=${r.verdicts.count()} kept=${r.kept.count()} " +

@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
   *
   * Queries run on a small thread pool — Spark's scheduler is
   * thread-safe and the jobs are mostly independent scans, so wall time
-  * is dominated by the slowest few queries, not the sum of all 38.
-  * Streaming queries (memory sinks, global temp view names) run on the
-  * main thread afterwards to avoid sink-name races.
+  * is dominated by the slowest few queries, not the sum of all 329.
+  * Streaming queries run on the main thread afterwards: each drains
+  * into a fixed, session-global memory sink name
+  * ([[graft.streaming.Drain.toMemory]]), so two at once would race.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -16,9 +17,7 @@ object Verify {
     // subset (the driver always passes exactly two)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Sessions.withGraftDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
+    val spark = graft.util.Sessions.local(cpus)
       // NOTE: parquet timestamps stay on the default INT96, which pyarrow
       // reads as NAIVE datetime64[ns] — matching the DuckDB oracle's naive
       // timestamps. TIMESTAMP_MICROS would read back tz-aware (UTC) and
@@ -27,10 +26,6 @@ object Verify {
       // range (see Scd2.FarFuture).
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      // the library's session extensions (custom functions, the
-      // RewriteRegexCount optimizer rule, the TopKPerKey strategy) are
-      // part of the product surface — verify WITH them active
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -40,13 +40,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Defensive read (reference app.py:13–20 returns an empty frame when
-    * the extract is missing): missing path → empty frame with schema. */
-  def loadOrEmpty(spark: SparkSession, dir: String, name: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (new java.io.File(s"$dir/$name.parquet").exists())
-      spark.read.schema(schema).parquet(s"$dir/$name.parquet")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 }

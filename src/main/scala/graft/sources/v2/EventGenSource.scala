@@ -139,15 +139,8 @@ object EventGen {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sumMoney2(col("value")).as("total_value"))
-    val name = "eventgen_stream_sink"
-    val q = counts.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("event_type")
+    graft.streaming.Drain.toMemory(counts, "complete", "eventgen_stream_sink")
+      .orderBy("event_type")
   }
 
   val schema: StructType = StructType(Seq(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
@@ -48,12 +47,9 @@ object BrokerReplay {
       .select(col("value").as("offset"))
     val enriched = offsets.join(Tables.events(spark, dir),
       col("offset") === col("event_id"))
-    val q = enriched.writeStream
+    Drain.run(enriched.writeStream
       .outputMode("append")
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
   }
 }

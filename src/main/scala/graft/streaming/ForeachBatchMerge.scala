@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** `foreachBatch` incremental merge — the operational sink pattern for
   * aggregates that outlive a micro-batch: each batch's partial counts
@@ -39,7 +38,7 @@ object ForeachBatchMerge {
       .agg(count(lit(1)).as("n"), sum(floor(col("value") * 100.0 + 0.5)
         .cast("long")).as("value_c"))
 
-    val q = evs.writeStream
+    Drain.run(evs.writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         // complete mode re-emits the full per-type state each batch, so
@@ -62,10 +61,7 @@ object ForeachBatchMerge {
         fs.delete(cur, true)
         fs.rename(new Path(next), cur)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
 
     spark.read.parquet(target + "/cur")
       .select(col("event_type"), col("n"),

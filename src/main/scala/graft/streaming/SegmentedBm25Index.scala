@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** SEGMENT-published text index (q328) — the Lucene storage model the
@@ -70,11 +69,9 @@ object SegmentedBm25Index {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("deleted", BooleanType)))
 
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("bm25seg-state", s"$dir/documents.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-bm25seg-run-$key-p$pid"
-  }
+  private val replay = new Drain.Replay("bm25seg", "documents.parquet")
+
+  def runRoot(dir: String): String = replay.root(dir)
 
   /** A committed segment: plain (one batch epoch) or compacted (the
     * fold of everything at or below its epoch). `ord = 2·epoch +
@@ -332,39 +329,18 @@ object SegmentedBm25Index {
   }
 
   /** Drain the q292 staged landing into a segment store, once per
-    * process per fixture. */
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def drainedRoot(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => drain(spark, dir))
-
-  private def drain(spark: SparkSession, dir: String): String = {
-    val land = StreamingBm25Index.stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val q = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySegment(spark, root, batch, batchId)
-        // the maintainer loop owns the merge policy: fold whenever the
-        // live segment count exceeds the bound, so serve fan-in stays
-        // bounded under continuous epochs
-        maybeCompact(spark, root)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    * process per fixture. The maintainer loop owns the merge policy:
+    * fold whenever the live segment count exceeds the bound, so serve
+    * fan-in stays bounded under continuous epochs. */
+  def drainedRoot(spark: SparkSession, dir: String): String = {
+    val root = replay.once(spark, dir,
+      StreamingBm25Index.stagedLanding(spark, dir), docSchema) {
+      (store, batch, batchId) =>
+        applySegment(spark, store, batch, batchId)
+        maybeCompact(spark, store)
+    }
     if (segments(root).isEmpty)
-      throw new IllegalStateException(
-        s"no segments drained from $land under $root")
+      throw new IllegalStateException(s"no segments drained under $root")
     root
   }
 

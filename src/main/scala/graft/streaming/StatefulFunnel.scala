@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful lifecycle funnel via `flatMapGroupsWithState` — the
   * custom-state form of the reference's order-lifecycle tracking
@@ -113,16 +113,8 @@ object StatefulFunnel {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(update)
 
-    val name = "stateful_funnel_sink"
-    val q = out.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // several snapshots per key if the drain ran >1 micro-batch: keep latest
-    spark.table(name)
+    Drain.toMemory(out, "append", "stateful_funnel_sink")
       .groupBy("user_id")
       .agg(max(col("max_stage")).cast("int").as("max_stage"),
         max(col("n_funnel_events")).as("n_funnel_events"),

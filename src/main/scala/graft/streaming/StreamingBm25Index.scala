@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.sources.{Bucketing, DeltaLog, Tables}
@@ -85,11 +84,9 @@ object StreamingBm25Index {
       land(epoch, "0001_epoch.parquet", t0 + 30000)
     }
 
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("bm25stream-state", s"$dir/documents.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-bm25stream-run-$key-p$pid"
-  }
+  private val replay = new Drain.Replay("bm25stream", "documents.parquet")
+
+  def runRoot(dir: String): String = replay.root(dir)
 
   private def tfOf(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
@@ -154,43 +151,10 @@ object StreamingBm25Index {
     ()
   }
 
-  /** Fixture dir → drained state root, once per process per fixture
-    * (computeIfAbsent also serializes racing first-callers — the
-    * Verify harness runs batch queries on a pool). */
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Fixture dir → drained state root, once per process per fixture. */
   def drainedStateRoot(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => drain(spark, dir))
-
-  private def drain(spark: SparkSession, dir: String): String = {
-    val land = stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
-    val lastBatch =
-      new java.util.concurrent.atomic.AtomicReference[java.lang.Long](null)
-    val q = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, root, batch, batchId)
-        lastBatch.set(batchId)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (lastBatch.get() == null)
-      throw new IllegalStateException(
-        s"no batches drained from $land — empty staged landing dir " +
-          "or wrong fixture path")
-    root
-  }
+    replay.once(spark, dir, stagedLanding(spark, dir), docSchema)(
+      applyBatch(spark, _, _, _))
 
   /** The resolved post-epoch postings PUBLISHED once as a t-bucketed
     * table — the serving artifact. Deterministic end state, so

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.IncrementalCuration
@@ -73,14 +72,12 @@ object StreamingCuration {
       land(delta, "0001_delta.parquet", t0 + 30000)
     }
 
+  private val replay = new Drain.Replay("curstream", "documents.parquet")
+
   /** Per-run scratch root (state logs + checkpoint), per fixture
     * signature AND pid — exposed so the spec can audit the per-batch
     * commit sizes on disk. */
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("curstream-state", s"$dir/documents.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-curstream-run-$key-p$pid"
-  }
+  def runRoot(dir: String): String = replay.root(dir)
 
   /** ONE maintainer step of the gated two-batch replay
     * ([[curationStream]]): resolve the state as of epochs < `batchId`
@@ -182,43 +179,13 @@ object StreamingCuration {
     * resolves state AS OF the previous epoch even if some tables had
     * already committed parts of the crashed batch. */
   def curationStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.sources.DeltaLog
-    val land = stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    // the scenario replays from scratch every invocation (deterministic
-    // end state); state + checkpoint live and die together, and the
-    // per-pid root is removed on JVM exit so runs don't accumulate
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
     val eval = IncrementalCuration.evalRegistry(spark, dir)
+    // the scenario replays from scratch every invocation (deterministic
+    // end state)
+    val root = replay(spark, dir, stagedLanding(spark, dir), docSchema)(
+      applyBatch(spark, _, eval, _, _))
     def log(t: String) = s"$root/state/$t"
-
-    // driver-held id of the last committed batch (None until one lands)
-    val lastBatch =
-      new java.util.concurrent.atomic.AtomicReference[java.lang.Long](null)
-
-    val q = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, root, eval, batch, batchId)
-        lastBatch.set(batchId)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    if (lastBatch.get() == null)
-      throw new IllegalStateException(
-        s"no batches drained from $land — the staged landing dir is " +
-          "empty (a foreign process blessed a half-staged dir?) or the " +
-          "fixture path is wrong")
 
     // read-time assembly from the committed state: verdict flags join
     // component labels; status = last batch's delta, default unchanged

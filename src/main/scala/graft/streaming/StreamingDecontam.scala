@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.TextOps
 import graft.sources.Tables
@@ -79,9 +78,8 @@ object StreamingDecontam {
       .option("maxFilesPerTrigger", "1")
       .parquet(land)
 
-    val q = stream.writeStream
+    Drain.run(stream.writeStream
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$out-ckpt")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val b = batch
@@ -107,9 +105,7 @@ object StreamingDecontam {
         // path — idempotent, never duplicated
         verdicts.write.mode("overwrite").parquet(s"$out/epoch=$epochId")
         ()
-      }
-      .start()
-    q.awaitTermination()
+      })
 
     spark.read.parquet(s"$out/*")
       .select("eval_id", "doc_id", "containment")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming deduplication — the ingestion-side twin of the batch exact
   * dedup (q12): at-least-once transports (Kafka redelivery, file-source
@@ -38,17 +37,8 @@ object StreamingDedup {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"))
 
-    val name = "streaming_dedup_sink"
-    val q = deduped.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
     // update-mode sink holds one row per trigger per key: keep the max
-    spark.table(name)
+    Drain.toMemory(deduped, "update", "streaming_dedup_sink")
       .groupBy("event_type").agg(max(col("n_events")).as("n_events"))
       .orderBy("event_type")
   }
@@ -121,17 +111,8 @@ object StreamingDedup {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("norm_tokens").cast("long")).as("n_tokens"))
 
-    val name = "streaming_doc_dedup_sink"
-    val q = deduped.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
     // counts are monotone across triggers: the max is the final state
-    spark.table(name)
+    Drain.toMemory(deduped, "update", "streaming_doc_dedup_sink")
       .groupBy("source")
       .agg(max(col("n_docs")).as("n_docs"),
         max(col("n_tokens")).as("n_tokens"))

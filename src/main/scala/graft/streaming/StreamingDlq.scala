@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.sources.{DeltaLog, Tables}
@@ -64,11 +63,9 @@ object StreamingDlq {
         "0001_b.txt", t0 + 30000)
     }
 
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("dlqstream-state", s"$dir/events.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-dlqstream-run-$key-p$pid"
-  }
+  private val replay = new Drain.Replay("dlqstream", "events.parquet")
+
+  def runRoot(dir: String): String = replay.root(dir)
 
   def applyBatch(spark: SparkSession, root: String, batch: DataFrame,
       batchId: Long): Unit = {
@@ -93,33 +90,10 @@ object StreamingDlq {
       Seq("event_id"))
   }
 
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def drainedStateRoot(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => drain(spark, dir))
-
-  private def drain(spark: SparkSession, dir: String): String = {
-    val land = stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
-    val q = spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .text(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, root, batch, batchId)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    root
-  }
+    replay.once(spark, dir, stagedLanding(spark, dir),
+      StructType(Seq(StructField("value", StringType))), "text")(
+      applyBatch(spark, _, _, _))
 
   /** The drained routing mart: per (sink, event_type) — row count and
     * exact cents (null for the quarantine side: its values never

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Analytics
 import graft.sources.Tables
@@ -34,16 +33,8 @@ object StreamingDrift {
       .select(col("event_type"), Analytics.driftBucket)
       .groupBy("event_type", "bucket")
       .agg(count(lit(1)).as("n_b"))
-    val name = "streaming_drift_sink"
-    val q = aggB.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val g = refA.join(spark.table(name), Seq("event_type", "bucket"),
-        "full_outer")
+    val aggBDrained = Drain.toMemory(aggB, "complete", "streaming_drift_sink")
+    val g = refA.join(aggBDrained, Seq("event_type", "bucket"), "full_outer")
       .select(col("event_type"), col("bucket"),
         coalesce(col("n_a"), lit(0L)).as("n_a"),
         coalesce(col("n_b"), lit(0L)).as("n_b"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.util.Portable
 
@@ -36,16 +35,9 @@ object StreamingEwma {
     val agg = StreamingFunnel.eventsStream(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(Portable.cents2(col("value"))).as("cents"))
-    val name = "streaming_ewma_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     graft.operators.Analytics
-      .ewmaFrom(spark.table(name), Seq("event_type"))
+      .ewmaFrom(Drain.toMemory(agg, "complete", "streaming_ewma_sink"),
+        Seq("event_type"))
       .orderBy("event_type", "day")
   }
 
@@ -62,15 +54,8 @@ object StreamingEwma {
     val agg = StreamingFunnel.eventsStream(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(Portable.cents2(col("value"))).as("cents"))
-    val name = "streaming_holt_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Analytics.holtFrom(spark.table(name))
+    graft.operators.Analytics.holtFrom(
+      Drain.toMemory(agg, "complete", "streaming_holt_sink"))
       .orderBy("event_type", "day")
   }
 
@@ -88,15 +73,8 @@ object StreamingEwma {
     val agg = StreamingFunnel.eventsStream(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(Portable.cents2(col("value"))).as("x"))
-    val name = "streaming_cusum_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Analytics.cusumFrom(spark.table(name), "event_type")
+    graft.operators.Analytics.cusumFrom(
+      Drain.toMemory(agg, "complete", "streaming_cusum_sink"), "event_type")
   }
 
   /** q325: the CONTINUOUS conformal monitor — q324's distribution-free
@@ -113,14 +91,7 @@ object StreamingEwma {
     val agg = StreamingFunnel.eventsStream(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(Portable.cents2(col("value"))).as("cents"))
-    val name = "streaming_conformal_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Analytics.conformalFrom(spark.table(name))
+    graft.operators.Analytics.conformalFrom(
+      Drain.toMemory(agg, "complete", "streaming_conformal_sink"))
   }
 }

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.Events
@@ -99,18 +98,9 @@ object StreamingFunnel {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-    val name = "streaming_funnel_sink"
-    val q = counts.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
     val stageDf = Events.stages.toDF("stage", "stage_rank")
     // update-mode memory sink may hold several versions per key: keep max
-    val latest = spark.table(name)
+    val latest = Drain.toMemory(counts, "update", "streaming_funnel_sink")
       .groupBy("event_type").agg(max(col("n")).as("n"))
     // Broadcast the buildable (right) side of the left outer join; a hint
     // on the preserved side is silently dropped with a WARN.
@@ -140,15 +130,7 @@ object StreamingFunnel {
       .agg(count(lit(1)).as("n_events"),
         sumMoney2(col("value")).as("window_value"))
 
-    val name = "streaming_windowed_counts_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    Drain.toMemory(agg, "complete", "streaming_windowed_counts_sink")
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("n_events"), col("window_value"))
@@ -170,15 +152,7 @@ object StreamingFunnel {
       .agg(count(lit(1)).as("n_events"),
         sumMoney2(col("value")).as("window_value"))
 
-    val name = "streaming_sliding_counts_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    Drain.toMemory(agg, "complete", "streaming_sliding_counts_sink")
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("n_events"), col("window_value"))
@@ -202,15 +176,8 @@ object StreamingFunnel {
       .agg(count(lit(1)).as("n_events"),
         sumMoney2(col("value")).as("stage_value"))
 
-    val name = "streaming_enriched_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("stage_rank")
+    Drain.toMemory(agg, "complete", "streaming_enriched_sink")
+      .orderBy("stage_rank")
   }
 
   /** Streaming SESSION windows in append mode (SURVEY §2.10 — the
@@ -266,16 +233,7 @@ object StreamingFunnel {
       .agg(count(lit(1)).as("n_events"),
         sumMoney2(col("value")).as("session_value"))
 
-    val name = "streaming_session_sink"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    spark.table(name)
+    Drain.toMemory(agg, "append", "streaming_session_sink")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
@@ -296,14 +254,7 @@ object StreamingFunnel {
         max_by(col("event_type"), struct(col("ts"), col("event_id")))
           .as("last_event"))
 
-    val name = "streaming_last_event_sink"
-    val q = latest.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id")
+    Drain.toMemory(latest, "complete", "streaming_last_event_sink")
+      .orderBy("user_id")
   }
 }

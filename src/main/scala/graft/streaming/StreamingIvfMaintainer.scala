@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.{Graphs, VectorOps}
@@ -88,14 +87,12 @@ object StreamingIvfMaintainer {
       land(epoch, "0001_epoch.parquet", t0 + 30000)
     }
 
+  private val replay = new Drain.Replay("ivfstream", "embeddings.parquet")
+
   /** Per-run scratch root (state logs + checkpoint), per fixture
     * signature AND pid — exposed so the spec can audit per-batch
     * commit sizes on disk. */
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("ivfstream-state", s"$dir/embeddings.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-ivfstream-run-$key-p$pid"
-  }
+  def runRoot(dir: String): String = replay.root(dir)
 
   /** In-memory snapshot of the four resolved state tables as of epoch
     * `upTo` (exclusive), each localCheckpointed — the cross-batch
@@ -357,54 +354,13 @@ object StreamingIvfMaintainer {
     ()
   }
 
-  /** Fixture dir → drained state root: the replay runs ONCE per
-    * process per fixture (the end state is deterministic), then every
-    * consumer — the q235 verdict, the q237 serve — reads the same
-    * committed state. computeIfAbsent also serializes concurrent
-    * first-callers (the Verify harness runs queries in parallel): two
-    * drains racing on one pid root would clobber each other's
-    * checkpoint. */
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drain the two-batch replay (once per process) and return the
-    * state root holding the four committed DeltaLog tables. */
+  /** Drain the two-batch replay (once per process per fixture, so
+    * every consumer — the q235 verdict, the q237 serve — reads the same
+    * committed state) and return the state root holding the four
+    * committed DeltaLog tables. */
   def drainedStateRoot(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => drain(spark, dir))
-
-  private def drain(spark: SparkSession, dir: String): String = {
-    val land = stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    // deterministic end state: replay from scratch per process;
-    // state + checkpoint live and die together with the pid root
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
-
-    val lastBatch =
-      new java.util.concurrent.atomic.AtomicReference[java.lang.Long](null)
-    val q = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, root, batch, batchId)
-        lastBatch.set(batchId)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    if (lastBatch.get() == null)
-      throw new IllegalStateException(
-        s"no batches drained from $land — the staged landing dir is " +
-          "empty (a foreign process blessed a half-staged dir?) or the " +
-          "fixture path is wrong")
-    root
-  }
+    replay.once(spark, dir, stagedLanding(spark, dir), vecSchema)(
+      applyBatch(spark, _, _, _))
 
   /** q235: the final cluster verdict — identical contract (and oracle)
     * to q233's one-shot epoch. The verdict assembles at read time from

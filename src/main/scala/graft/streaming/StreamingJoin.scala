@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream inner join with event-time range bounds (SURVEY §2.10
   * — the last streaming join shape the surface was missing; q53 covers
@@ -38,16 +37,7 @@ object StreamingJoin {
              |AND view_ts <= purchase_ts""".stripMargin))
       .select(col("user_id"), col("purchase_ts"), col("view_ts"))
 
-    val name = "streaming_join_sink"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    spark.table(name)
+    Drain.toMemory(joined, "append", "streaming_join_sink")
       .orderBy("user_id", "purchase_ts", "view_ts")
   }
 
@@ -129,18 +119,9 @@ object StreamingJoin {
              |AND view_ts <= purchase_ts""".stripMargin), "left_outer")
       .select(col("user_id"), col("purchase_ts"), col("view_ts"))
 
-    val name = "streaming_lo_join_sink"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
     // the sentinel pair never emits (the purchase's own verdict stays
     // pending forever); the filter is defense-in-depth
-    spark.table(name)
+    Drain.toMemory(joined, "append", "streaming_lo_join_sink")
       .filter(col("user_id") =!= -1)
       .orderBy("user_id", "purchase_ts", "view_ts")
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.Silver
@@ -66,18 +65,9 @@ object StreamingLifecycle {
         sum(floor(coalesce(col("payment_value"), lit(0.0)) * 100.0 + 0.5)
           .cast("long")).as("cents"))
 
-    val name = "streaming_lifecycle_sink"
-    val q = counts.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
     // update-mode memory sink may hold several versions per key: the
     // final version has the max running count
-    val latest = spark.table(name)
+    val latest = Drain.toMemory(counts, "update", "streaming_lifecycle_sink")
       .groupBy("event_type")
       .agg(max(col("n_events")).as("n_events"), max(col("cents")).as("cents"))
     val stageDf = graft.Pipeline.lifecycleStages.toDF("stage", "stage_rank")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.TextOps
@@ -74,14 +73,12 @@ object StreamingPostingStats {
       land(epoch, "0001_epoch.parquet", t0 + 30000)
     }
 
+  private val replay = new Drain.Replay("pststream", "documents.parquet")
+
   /** Per-run scratch root (state logs + checkpoint), per fixture
     * signature AND pid — exposed so the spec can audit per-batch
     * commit sizes on disk. */
-  def runRoot(dir: String): String = {
-    val key = FixtureStaging.key("pststream-state", s"$dir/documents.parquet")
-    val pid = ProcessHandle.current().pid()
-    s"/tmp/graft-pststream-run-$key-p$pid"
-  }
+  def runRoot(dir: String): String = replay.root(dir)
 
   /** ONE maintainer step: resolve state `< batchId`, add the batch
     * docs' stats, subtract the tombstoned docs' (re-tokenized from the
@@ -139,52 +136,12 @@ object StreamingPostingStats {
     ()
   }
 
-  /** Fixture dir → drained state root: the replay runs ONCE per
-    * process per fixture (the end state is deterministic).
-    * computeIfAbsent also serializes concurrent first-callers (the
-    * Verify harness runs queries in parallel): two drains racing on
-    * one pid root would clobber each other's state dir and checkpoint
-    * — the same hazard the IVF maintainer's drainedStateRoot guards. */
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Drain the two-batch replay and return the final (t, df, tf)
     * table — identical contract to q232's, over the post-epoch
     * corpus. */
-  def statsStream(spark: SparkSession, dir: String): DataFrame =
-    DeltaLog.read(spark,
-      s"${drained.computeIfAbsent(dir, _ => drain(spark, dir))}/state/stats",
-      Seq("t")).get.orderBy("t")
-
-  private def drain(spark: SparkSession, dir: String): String = {
-    val land = stagedLanding(spark, dir)
-    val root = runRoot(dir)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    FixtureStaging.deleteOnExit(root)
-
-    val lastBatch =
-      new java.util.concurrent.atomic.AtomicReference[java.lang.Long](null)
-    val q = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(land)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, root, batch, batchId)
-        lastBatch.set(batchId)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    if (lastBatch.get() == null)
-      throw new IllegalStateException(
-        s"no batches drained from $land — the staged landing dir is " +
-          "empty (a foreign process blessed a half-staged dir?) or the " +
-          "fixture path is wrong")
-    root
+  def statsStream(spark: SparkSession, dir: String): DataFrame = {
+    val root = replay.once(spark, dir, stagedLanding(spark, dir), docSchema)(
+      applyBatch(spark, _, _, _))
+    DeltaLog.read(spark, s"$root/state/stats", Seq("t")).get.orderBy("t")
   }
 }

@@ -68,13 +68,10 @@ object StreamingScd2 {
         .schema(org.apache.spark.sql.Encoders.product[CdcRow].schema)
         .parquet(land)
         .as[CdcRow]
-      val q = versions(evs).writeStream
+      Drain.run(versions(evs).writeStream
         .outputMode("append")
         .format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
     }
 
     // batch 1: initial load (80% of keys) lands at T1, first drain

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.expressions.Window
 
 import graft.util.Portable
@@ -36,18 +35,10 @@ object StreamingTopK {
       .groupBy("user_id")
       .agg(sum(Portable.cents2(col("value"))).as("cents"),
         count(lit(1)).as("n_purchases"))
-    val name = "streaming_topk_sink"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // top-k first via TakeOrderedAndProject's distributed heap; the
     // global-order window then ranks only k rows
     val w = Window.orderBy(desc("cents"), asc("user_id"))
-    spark.table(name)
+    Drain.toMemory(agg, "complete", "streaming_topk_sink")
       .orderBy(desc("cents"), asc("user_id")).limit(k)
       .withColumn("rank", row_number().over(w))
       .select(col("rank"), col("user_id"), col("n_purchases"),

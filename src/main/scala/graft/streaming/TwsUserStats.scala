@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-user running stats on Spark 4's `transformWithState` — the
   * successor API to `flatMapGroupsWithState` (q42): typed state
@@ -69,17 +69,9 @@ object TwsUserStats {
       val out = evs.groupByKey(_.user_id)
         .transformWithState(new Proc, TimeMode.None(), OutputMode.Update())
 
-      val name = "tws_user_stats_sink"
-      val q = out.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // last snapshot per key == the batch aggregate; n_events strictly
       // increases per touched batch, so the struct max IS the last one
-      spark.table(name)
+      Drain.toMemory(out, "update", "tws_user_stats_sink")
         .groupBy("user_id")
         .agg(max(struct(col("n_events"), col("total_value"),
           col("max_stage"))).as("s"))

@@ -35,4 +35,15 @@ object Sessions {
     // deployment would run with this on for the same reason.
     .config("spark.rdd.compress", "true")
     .config("spark.ui.enabled", "false")
+
+  /** The session builder of every graft main: the shared defaults on
+    * `local[cpus]` with one shuffle partition per core and the graft
+    * session extensions (custom functions, the RewriteRegexCount
+    * optimizer rule, the TopKPerKey strategy), which are part of the
+    * product surface. Callers add their own configs on top. */
+  def local(cpus: String): SparkSession.Builder =
+    withGraftDefaults(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+      .withExtensions(new graft.functions.GraftExtensions)
 }

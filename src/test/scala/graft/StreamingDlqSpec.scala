@@ -8,7 +8,8 @@ import graft.streaming.StreamingDlq
   * gate can't see directly: (1) epoch replay is a no-op on BOTH sinks
   * (the crash-between-commits story), and (2) the routing is a
   * PARTITION — every event lands on exactly one side, none on both,
-  * none dropped.
+  * none dropped. Also pins the empty-drain guard that the q310 replay
+  * shares with every other fixture replay (`Drain.Replay`).
   */
 class StreamingDlqSpec extends SparkSpec {
   import spark.implicits._
@@ -43,5 +44,19 @@ class StreamingDlqSpec extends SparkSpec {
       .select($"event_id").as[Long].collect().toSet
     assert(m ++ d == all, "routing dropped or invented events")
     assert(d == all.filter(_ % 13 == 0), "quarantine rule")
+  }
+
+  test("a replay of an empty landing dir throws, naming the dir") {
+    import org.apache.spark.sql.types._
+    val land = java.nio.file.Files.createTempDirectory("graft-empty-land")
+    try {
+      val replay = new graft.streaming.Drain.Replay("emptyland", "none")
+      val e = intercept[IllegalStateException] {
+        replay(spark, land.toString, land.toString,
+          StructType(Seq(StructField("value", StringType))), "text")(
+          (_, _, _) => ())
+      }
+      assert(e.getMessage.contains(land.toString))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(land.toFile)
   }
 }
